@@ -19,12 +19,18 @@ object PlanDump {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.prepareFixtures(spark, sfDir) catch { case _: Throwable => () }
+    // a failed prep is printed and stamped into every dump it taints
+    val prepFailure: Option[String] =
+      try { SparkEntry.prepareFixtures(spark, sfDir); None }
+      catch { case e: Throwable =>
+        println(s"[plandump] prepareFixtures FAILED: $e")
+        Some(s"-- WARNING: prepareFixtures failed, plan may not match a bench run: $e\n")
+      }
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
+        val txt = prepFailure.getOrElse("") + df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), txt)
         println(s"[plandump] wrote ${n}_$suffix.txt (${txt.length} chars)")

@@ -4,7 +4,8 @@ import graft.core.{Fixtures, Tables}
 import graft.functions.Distances
 import graft.index.{Grid, GridConfig}
 import graft.multimodal.Multimodal
-import graft.operators.{Ann, AsOfJoin, CosineJoin, Dedup, GraphAnn, Knn, KnnJoin, KnnTopK, Mips, SaltedJoin, Snapshot, TextAnalysis}
+import graft.operators.{Ann, AsOfJoin, CosineJoin, Dedup, GraphAnn, Knn, KnnTopK, Mips, SaltedJoin, Snapshot, TextAnalysis}
+import graft.plans.KnnJoinPlan
 import graft.oracle.DuckSql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -690,11 +691,13 @@ object SparkEntry {
           .withColumn("weight", (lit(1) + col("vec_id") % 10).cast("double"))
           .withColumn("band", (col("vec_id") % 10).cast("long")),
         Q64, K, bruteForceThreshold = 0)),
-    // batch kNN join (SURVEY §2.1 #1 batch form)
+    // batch kNN join (SURVEY §2.1 #1 batch form). knn_join_l2,
+    // knn_join_l2_plan and knn_join_l2_agg all run the one exact kernel
+    // (KnnJoinPlan → KnnJoinExec); the three names stay in the contract
     "knn_join_l2" -> ((s, d) =>
-      KnnJoin.join(
+      KnnJoinPlan.join(
         emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        emb(s, d), k = 3, dim = Dim)
+        emb(s, d), k = 3)
         .orderBy(col("query_id"), col("rn"))),
     // scale variant: per-query candidate cells + geometric widening (no
     // |Q|×|db| cross product) — exact, same oracle as the cross form.
@@ -719,19 +722,19 @@ object SparkEntry {
         graft.index.QuantileGrid.withCellId(emb(s, d), "embedding", qgridCfg(s, d)),
         qgridCfg(s, d), k = 3, bruteForceThreshold = 0)
         .orderBy(col("query_id"), col("rn"))),
-    // first-class plan variant: custom LogicalPlan → SparkStrategy →
-    // KnnJoinExec (per-partition bounded top-k + k-bounded reduceByKey
-    // merge); bit-equal to the composition forms, same oracle
+    // custom LogicalPlan → SparkStrategy → KnnJoinExec (per-partition
+    // bounded top-k + k-bounded reduceByKey merge), same oracle
     "knn_join_l2_plan" -> ((s, d) =>
-      graft.plans.KnnJoinPlan.join(
+      KnnJoinPlan.join(
         emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
         emb(s, d), k = 3)
         .orderBy(col("query_id"), col("rn"))),
-    // skew-safe variant: bounded top-k Aggregator (map-side partial top-k)
+    // skew-safe contract name: KnnJoinExec's shuffle carries ≤ k rows per
+    // query per map partition, whatever the candidate skew
     "knn_join_l2_agg" -> ((s, d) =>
-      KnnTopK.join(
+      KnnJoinPlan.join(
         emb(s, d).filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-        emb(s, d), k = 3, dim = Dim)
+        emb(s, d), k = 3)
         .orderBy(col("query_id"), col("rn"))),
     // --- point ops / scans (SURVEY §2.1 #7-9)
     "point_lookup" -> ((s, d) =>
@@ -1421,7 +1424,7 @@ object SparkEntry {
       val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
       val approx = Ann.ivfJoin(q, Ann.assign(db, cents), cents, k = K, nprobe = 4)
         .select(col("query_id"), col("vec_id"))
-      val exact = KnnJoin.join(q, db, K, Dim)
+      val exact = KnnJoinPlan.join(q, db, K)
         .select(col("query_id").as("eq"), col("vec_id").as("ev"))
       val hits = approx.join(exact,
           col("query_id") === col("eq") && col("vec_id") === col("ev"), "left_semi")
@@ -1513,7 +1516,7 @@ object SparkEntry {
         .select(col("vec_id").as("query_id"), col("embedding"))
       val cents = Ann.lloydSeededExact(db, IvfSeeds, iters = 2)
       val assigned = Ann.assign(db, cents)
-      val exact = KnnJoin.join(q, db, K, Dim)
+      val exact = KnnJoinPlan.join(q, db, K)
         .select(col("query_id").as("eq"), col("vec_id").as("ev"))
       // r10 fused arms (the oracle's shape): score candidates ONCE at the
       // widest probe width, carrying each cell's probe RANK (posexplode of
@@ -1613,7 +1616,7 @@ object SparkEntry {
       val approx = GraphAnn.searchJoin(graph, db, q, k = K,
           beam = GraphBeam, hops = GraphHops, nEntry = GraphEntries, dim = Dim)
         .select(col("query_id"), col("vec_id"))
-      val exact = KnnJoin.join(q, db, K, Dim)
+      val exact = KnnJoinPlan.join(q, db, K)
         .select(col("query_id").as("eq"), col("vec_id").as("ev"))
       val hits = approx.join(exact,
           col("query_id") === col("eq") && col("vec_id") === col("ev"), "left_semi")

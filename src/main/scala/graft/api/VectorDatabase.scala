@@ -3,6 +3,7 @@ package graft.api
 import graft.functions.Distances
 import graft.index.{Grid, GridConfig}
 import graft.operators.{Knn, Snapshot}
+import graft.plans.KnnJoinPlan
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -199,11 +200,14 @@ final class VectorDatabase private (
 
   /** Batch kNN join: k nearest stored vectors for EVERY query row — the
     * cluster-scale form of [[findKNearestNeighbors]] (SURVEY §2.1 #1
-    * batch-of-queries). Skew-safe bounded top-k aggregation under the hood. */
+    * batch-of-queries), by squared L2. Runs the exact [[KnnJoinPlan]]
+    * operator: the query batch is broadcast, the store streams once per
+    * partition, and the shuffle carries ≤ k rows per query per partition.
+    * Output: (query_id, vec_id, dist, rn). */
   def knnJoin(queries: DataFrame, k: Int,
       queryIdCol: String = "query_id"): DataFrame =
-    graft.operators.KnnTopK.join(queries, state.drop("cell_id"), k, cfg.dim,
-      queryIdCol = queryIdCol)
+    KnnJoinPlan.join(queries.select(col(queryIdCol).as("query_id"), col("embedding")),
+      state, k)
 
   /** Cell-partitioned parquet (candidate-cell pruning = file skipping) with
     * rows id-sorted inside each partition, so parquet vec_id min/max stats

@@ -83,12 +83,11 @@ object GraphAnn {
       .filter(col("vec_id") =!= col("src"))
       .withColumn("dist",
         Distances.squaredL2Cols(col("src_embedding"), col("embedding"), dim))
-    // a (src, dst) pair can arrive via several shared probed cells with
-    // the SAME dist (functionally determined) — the dedup-on-insert top-k
-    // aggregator collapses them inside its ≤m buffers, saving the full
-    // candidate-set groupBy exchange the old min-collapse paid (r17;
-    // values pinned equal in GraphAnnSpec)
-    KnnTopK.topKDedup(pairs.withColumnRenamed("src", "query_id"), m)
+    // a (src, dst) pair can arrive via several shared probed cells — the
+    // top-k aggregator keeps one (min-dist) copy per id inside its ≤m
+    // buffers, saving the full candidate-set groupBy exchange a
+    // min-collapse would pay (values pinned equal in GraphAnnSpec)
+    KnnTopK.topK(pairs.withColumnRenamed("src", "query_id"), m)
       .select(col("query_id").as("src"), col("vec_id").as("dst"),
         col("dist"), col("rn"))
   }

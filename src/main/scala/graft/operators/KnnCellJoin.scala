@@ -2,12 +2,13 @@ package graft.operators
 
 import graft.functions.Distances
 import graft.index.{Grid, GridConfig, QuantileGridConfig}
+import graft.plans.KnnJoinPlan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact batch kNN join with per-query candidate-cell pruning — the scale
-  * form of [[KnnJoin]]: instead of |Q| × |db| distances (broadcast cross),
+  * form of [[KnnJoinPlan]]: instead of |Q| × |db| distances (brute force),
   * each query joins only the db cells inside its current search box, and
   * unfinished queries widen their box geometrically.
   *
@@ -39,7 +40,7 @@ import org.apache.spark.sql.functions._
   * the FULL-dim kth distance against the gridded-dims box, so when most
   * of the distance lives in ungridded dims (e.g. 64-dim vectors, 3
   * gridded) no box short of everything certifies and the loop degenerates
-  * to a full scan plus round overhead — use [[KnnTopK]] (exact) or
+  * to a full scan plus round overhead — use [[KnnJoinPlan]] (exact) or
   * [[Ann]] (IVF/LSH, approximate) there. In low-dim fully-gridded data
   * (geo, PCA'd embeddings) the first rounds certify and the join touches
   * a small cell fraction.
@@ -111,7 +112,7 @@ object KnnCellJoin {
     * sibling of [[QuantileGrid.prunedKnnDf]]: same widening loop, with the
     * per-dim bucket ranges derived from the calibrated boundary table
     * instead of the uniform bucket formula. Identical results to the
-    * brute [[KnnJoin]] (the oracle contract); preferable on skewed
+    * brute [[KnnJoinPlan]] (the oracle contract); preferable on skewed
     * corpora where equal-width cells pile up. */
   def joinQuantile(queries: DataFrame, indexedDb: DataFrame,
       cfg: QuantileGridConfig, k: Int,
@@ -156,19 +157,17 @@ object KnnCellJoin {
     val qs0 = Grid.requireDim(queries, vecCol, dim)
       .select(col(queryIdCol), col(vecCol).as("q_embedding"))
       .localCheckpoint(true)
-    // Exact aggregator cross join over a query subset — the fast path for
+    // Exact brute-force join over a query subset — the fast path for
     // small stores AND the escape hatch for uncertifiable stragglers.
     def bruteOn(qs: DataFrame): DataFrame =
-      KnnTopK.topK(
-          indexedDb.crossJoin(broadcast(qs))
-            .select(col(queryIdCol).as("query_id"), col(dbIdCol).as("vec_id"),
-              Distances.squaredL2Cols(col("q_embedding"), col(vecCol), dim).as("dist")),
-          k)
+      KnnJoinPlan.join(
+          qs.select(col(queryIdCol).as("query_id"), col("q_embedding").as("embedding")),
+          indexedDb.select(col(dbIdCol).as("vec_id"), col(vecCol).as("embedding")), k)
         .withColumnRenamed("query_id", queryIdCol)
         .withColumnRenamed("vec_id", dbIdCol)
     // Cost-based path choice (same rule as Knn.prunedSearch): below the
     // threshold the widening loop's per-round jobs cost more than one
-    // aggregator cross join; above it, cell pruning skips most of the db
+    // brute-force join; above it, cell pruning skips most of the db
     // per query. Identical results either way (specs pin threshold = 0).
     if (indexedDb.count() <= bruteForceThreshold) return bruteOn(qs0)
 

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * neighbors are mislabeled/noise/OOD rows a curation pipeline drops or
   * down-weights before training.
   *
-  * Built on the same broadcast-pairs + per-query top-k kernel as
-  * [[KnnJoin]] (the batch form of the reference's flagship query,
+  * Built on the batch kNN-join kernel [[graft.plans.KnnJoinPlan]] (the
+  * batch form of the reference's flagship query,
   * vectordb/kd_tree_database.py:285-304) with the self-pair excluded —
   * a point is never its own neighbor. The k-th distance is emitted as
   * `MAX(dist) over the k nearest` (order-independent, so engine-exact
@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the scored subset broadcasts (score a sample, or shard the
   * full corpus into query batches); the corpus side never shuffles — the
-  * only shuffle is the window's partition-by-query over the candidate
-  * pairs. At 100 TB, cut candidates with the cell-pruned join
+  * join's shuffle carries ≤ k+1 rows per query per corpus partition, and
+  * the self-exclusion re-rank sees ≤ k+1 rows per query. At 100 TB, cut
+  * candidates with the cell-pruned join
   * ([[KnnCellJoin]]) instead of the cross product; the scoring contract
   * (k-th-NN distance, self excluded) is unchanged.
   */
@@ -34,19 +35,17 @@ object Outlier {
     * UNDERESTIMATE of the true k-th; callers gate on `n_neighbors = k`
     * (checking it here would cost an eager count job at plan-build time).
     *
-    * Top-k runs through the bounded [[KnnTopK]] aggregator, not a window:
-    * a window rank shuffles EVERY candidate pair on query_id (measured
-    * 290s at 1k scored × 1M corpus in ScaleProbe), while the aggregator's
-    * map-side partials cap the shuffle at k rows per query per map task —
+    * Top-k runs through the KnnJoinExec operator, not a window: a window
+    * rank shuffles EVERY candidate pair on query_id (measured 290s at 1k
+    * scored × 1M corpus in ScaleProbe), while the operator's per-partition
+    * bounded buffers cap the shuffle at k+1 rows per query per partition —
     * same (dist ASC, id ASC) order, bit-identical kth distance. */
   def kthNnDistance(db: DataFrame, queries: DataFrame, k: Int, dim: Int,
       threshold: Double, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    // Top-(k+1) through the dedicated KnnJoinExec kernel, then drop the
-    // self-pair. The composition form (crossJoin + aggregator) pays
-    // Tungsten row materialization for EVERY candidate pair — measured
-    // 256s at 1k × 1M in ScaleProbe; the physical operator streams the
-    // corpus once per partition through a primitive-array distance loop.
+    // Top-(k+1) through the KnnJoinExec kernel, then drop the self-pair.
+    // The operator streams the corpus once per partition through a
+    // primitive-array distance loop (12.4 s at 1k × 1M in ScaleProbe).
     // k+1 is exact: removing at most one self row from the top-(k+1)
     // leaves at least the k nearest others.
     val qs = queries.select(col(idCol).as("query_id"), col(vecCol).as("embedding"))

@@ -8,21 +8,23 @@ import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjectio
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graftbridge.DatasetBridge
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType}
 
 /** First-class logical operator for the batch kNN join — the one reference
   * operator family (filtered kNN, `vectordb/kd_tree_database.py:285-304`,
   * batched) whose WHOLE-operator semantics no single built-in relational
-  * node expresses. The §2.1 #1 composition forms (window-rank, typed
-  * Aggregator) stay the default; this node is the SparkSessionExtensions
-  * path of the same operator: a resolved marker [[BinaryNode]] that the
-  * planner ([[KnnJoinStrategy]]) lowers to a dedicated physical operator
-  * ([[KnnJoinExec]]).
+  * node expresses. It is the engine's single exact brute-force batch kNN
+  * join: a resolved marker [[BinaryNode]] that the planner
+  * ([[KnnJoinStrategy]]) lowers to a dedicated physical operator
+  * ([[KnnJoinExec]]). [[graft.operators.KnnCellJoin]], the pruned form,
+  * falls back to it for small stores and uncertifiable stragglers.
   *
-  * Contract (identical to [[graft.operators.KnnTopK.join]]): `queries`
-  * provides (query_id LONG, embedding ARRAY<FLOAT>) — a SMALL relation
-  * (broadcast side); `data` provides (vec_id LONG, embedding ARRAY<FLOAT>).
-  * Output is the top-k rows per query by squared L2, total-ordered
+  * Contract: `queries` provides (query_id, embedding ARRAY<FLOAT>) — a
+  * SMALL relation (broadcast side); `data` provides (vec_id, embedding
+  * ARRAY<FLOAT>). Integral ids are read as LONG. Callers rename their
+  * columns to this contract. Output is the top-k rows per query by
+  * squared L2, total-ordered
   * (dist ASC, vec_id ASC), rn = 1..k; data rows with null id/vector are
   * skipped (the metadata-filter form pre-filters `data`, preserving the
   * reference's filter-before-k semantics, `kd_tree_database.py:186-190`).
@@ -70,15 +72,26 @@ object KnnJoinPlan {
     * Project has no logical counterpart, so AQE's logicalLink-based stage
     * substitution never records the child's materialized query stage and
     * the replan loop adopts a "new" plan forever (livelock, observed with
-    * a cached input table). */
+    * a cached input table). The pre-projection also casts the integral
+    * ids to LONG, because [[KnnJoinExec]] reads them with `getLong` and
+    * would misread an INT id. For the same reason other id types (a cast
+    * would null them, and null ids are skipped) and vector columns that
+    * are not ARRAY<FLOAT> (the operator reads `toFloatArray`) are rejected
+    * here. */
   def join(queriesDf: DataFrame, dataDf: DataFrame, k: Int): DataFrame = {
     val spark = queriesDf.sparkSession
     install(spark)
+    def side(df: DataFrame, id: String): LogicalPlan = {
+      val p = df.select(col(id), col("embedding"))
+      (p.schema(id).dataType, p.schema("embedding").dataType) match {
+        case (ByteType | ShortType | IntegerType | LongType, ArrayType(FloatType, _)) =>
+          DatasetBridge.analyzed(p.select(col(id).cast(LongType).as(id), col("embedding")))
+        case (i, v) => throw new IllegalArgumentException(
+          s"KnnJoinPlan: needs an integral $id and an ARRAY<FLOAT> embedding, got $i and $v")
+      }
+    }
     DatasetBridge.ofRows(spark,
-      KnnJoinPlan(
-        DatasetBridge.analyzed(queriesDf.select("query_id", "embedding")),
-        DatasetBridge.analyzed(dataDf.select("vec_id", "embedding")),
-        k, freshOutput()))
+      KnnJoinPlan(side(queriesDf, "query_id"), side(dataDf, "vec_id"), k, freshOutput()))
   }
 
   /** Idempotently register the planner strategy + optimizer rule on a
@@ -223,8 +236,8 @@ object KnnJoinStrategy extends SparkStrategy {
   * same guarantee as [[graft.operators.KnnTopK]], here enforced by the
   * operator itself instead of by how the query is composed). Distances use
   * the identical float→double left-to-right IEEE loop as
-  * [[graft.functions.VecMetricCols]], so results are bit-equal to the
-  * composition forms.
+  * [[graft.functions.VecMetricCols]], so results are bit-equal to a
+  * [[graft.operators.KnnTopK.topK]] over the scored cross product.
   */
 case class KnnJoinExec(
     out: Seq[Attribute], k: Int,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.KnnJoin
+import graft.plans.KnnJoinPlan
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -23,13 +23,14 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 object StreamingKnn {
 
   /** Serve a stream of (query_id, embedding) rows: every micro-batch is
-    * answered with the exact batch kNN join against `db`, and the
-    * (query_id, vec_id, dist, rn) answers are handed to `sink`. */
-  def serve(queries: DataFrame, db: DataFrame, k: Int, dim: Int)(
+    * answered with the exact batch kNN join ([[KnnJoinPlan]]) against `db`
+    * (vec_id, embedding), and the (query_id, vec_id, dist, rn) answers are
+    * handed to `sink`. */
+  def serve(queries: DataFrame, db: DataFrame, k: Int)(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(KnnJoin.join(batch, db, k, dim), batchId)
+        sink(KnnJoinPlan.join(batch, db, k), batchId)
       }
 }

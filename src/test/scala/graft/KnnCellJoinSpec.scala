@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Fixtures
 import graft.index.{Grid, GridConfig}
-import graft.operators.{KnnCellJoin, KnnJoin}
+import graft.operators.KnnCellJoin
 import org.apache.spark.sql.functions._
 
 class KnnCellJoinSpec extends SparkSpecBase {
@@ -19,7 +19,7 @@ class KnnCellJoinSpec extends SparkSpecBase {
         bruteForceThreshold = 0)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val viaCross = KnnJoin.join(queries, emb, k = 4, dim = Fixtures.Dim)
+    val viaCross = ExactKnn.crossTopK(queries, emb, k = 4, dim = Fixtures.Dim)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(viaCells.toSeq == viaCross.toSeq)
@@ -79,7 +79,7 @@ class KnnCellJoinSpec extends SparkSpecBase {
         bruteForceThreshold = 0)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val viaCross = KnnJoin.join(queries, emb, k = 4, dim = Fixtures.Dim)
+    val viaCross = ExactKnn.crossTopK(queries, emb, k = 4, dim = Fixtures.Dim)
       .orderBy("query_id", "rn")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(viaCells.toSeq == viaCross.toSeq)
@@ -110,7 +110,7 @@ class KnnCellJoinSpec extends SparkSpecBase {
           bruteForceThreshold = 0)
         .orderBy("query_id", "rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val viaCross = KnnJoin.join(queries, db, k, dim)
+      val viaCross = ExactKnn.crossTopK(queries, db, k, dim)
         .orderBy("query_id", "rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(viaCells == viaCross, s"trial $trial qc=$qc n=$n k=$k")
@@ -134,7 +134,7 @@ class KnnCellJoinSpec extends SparkSpecBase {
           Grid.withCellId(db, "embedding", cfg), cfg, k, bruteForceThreshold = 0)
         .orderBy("query_id", "rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val viaCross = KnnJoin.join(queries, db, k, dim)
+      val viaCross = ExactKnn.crossTopK(queries, db, k, dim)
         .orderBy("query_id", "rn")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(viaCells == viaCross, s"trial $trial cfg=$cfg n=$n k=$k")

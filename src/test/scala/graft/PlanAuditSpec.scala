@@ -47,11 +47,10 @@ class PlanAuditSpec extends SparkSpecBase {
     "text_pmi_bigrams", "text_quality_qnorm",
     "rank_ndcg_bm25", "rerank_rrf_hybrid", "range_join_price_bands",
     // size-targeted query/probe pages (count-derived, ~20-25 rows at any SF)
-    "ann_graph_recall", // exact ground-truth arm: KnnJoin over the ~20-row page
     "ann_ivf_filtered_recall", // 4 bands x the same bounded exact arm
-    "ann_ivf_recall", "ann_ivf_recall_curve", "dedup_edit_distance",
+    "ann_ivf_recall_curve", "dedup_edit_distance",
     "dedup_lsh_recall", "knn_classify_loo", "knn_hard_negatives",
-    "knn_join_l2", "knn_join_l2_agg", "sim_maxsim_join",
+    "sim_maxsim_join",
     "vec_pairwise_sim_estimate", "vec_truncate_recall")
 
   /** Wide fixture tables and their column counts: a scan that reads the

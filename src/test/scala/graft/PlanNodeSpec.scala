@@ -1,17 +1,18 @@
 package graft
 
-import graft.operators.KnnTopK
 import graft.plans.{KnnJoinExec, KnnJoinPlan}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The SparkSessionExtensions whole-operator path (SURVEY §2.2 UDF/UDAF
   * row): custom LogicalPlan → SparkStrategy → custom SparkPlan for the
-  * batch kNN join. Pins (a) bit-equality with the Aggregator composition
-  * form, (b) that the planner actually lowers through KnnJoinExec, and
-  * (c) operator edge cases (empty sides, filtered data, missing columns).
+  * batch kNN join. Pins (a) bit-equality with the KnnTopK aggregator over
+  * the explicit cross product, (b) that the planner actually lowers
+  * through KnnJoinExec, and (c) operator edge cases (empty sides, filtered
+  * data, missing columns, INT ids, non-integral ids, non-float vectors).
   */
 class PlanNodeSpec extends SparkSpecBase {
+  import spark.implicits._
 
   private def emb: DataFrame = spark.read.parquet(s"$sfDir/embeddings.parquet")
   private def queries: DataFrame =
@@ -23,8 +24,20 @@ class PlanNodeSpec extends SparkSpecBase {
 
   test("KnnJoinPlan.join is bit-equal to the KnnTopK composition form") {
     val viaPlan = KnnJoinPlan.join(queries, emb, k = 3)
-    val viaAgg = KnnTopK.join(queries, emb, k = 3, dim = core.Fixtures.Dim)
+    val viaAgg = ExactKnn.crossTopK(queries, emb, k = 3, dim = core.Fixtures.Dim)
     assert(collect(viaPlan) == collect(viaAgg))
+  }
+
+  test("INT ids, negative ones included, come back as the same LONG ids") {
+    // the operator reads ids with getLong: without the pre-projection cast
+    // an INT -1 would come back as 4294967295
+    val db = (-6 to 5).map(i => (i, Array(i.toFloat, (i * i).toFloat / 4f)))
+      .toDF("vec_id", "embedding")
+    val qs = Seq((-3, Array(-2.5f, 1.0f)), (-1, Array(0.2f, 0.0f)), (2, Array(4.0f, 4.0f)))
+      .toDF("query_id", "embedding")
+    val got = collect(KnnJoinPlan.join(qs, db, k = 4))
+    assert(got == ExactKnn.perQuery(qs, db, k = 4))
+    assert(got.map(_._1).distinct == Seq(-3L, -1L, 2L))
   }
 
   test("the planner lowers KnnJoinPlan through KnnJoinExec") {
@@ -51,7 +64,7 @@ class PlanNodeSpec extends SparkSpecBase {
   test("filter-before-k semantics: pre-filtered data side") {
     val filtered = emb.filter(col("label") === 3)
     val viaPlan = KnnJoinPlan.join(queries, filtered, k = 3)
-    val viaAgg = KnnTopK.join(queries, filtered, k = 3, dim = core.Fixtures.Dim)
+    val viaAgg = ExactKnn.crossTopK(queries, filtered, k = 3, dim = core.Fixtures.Dim)
     assert(collect(viaPlan) == collect(viaAgg))
   }
 
@@ -84,6 +97,21 @@ class PlanNodeSpec extends SparkSpecBase {
     }
     assert(ex.getMessage.contains("query_id") ||
       (ex.getCause != null && ex.getCause.getMessage.contains("query_id")))
+  }
+
+  test("non-integral ids and non-float vectors are rejected, not misread") {
+    // KnnJoinExec reads vectors with toFloatArray (ARRAY<DOUBLE> bytes would
+    // be reinterpreted as floats); a STRING id cast to LONG would be null,
+    // and null-id rows are skipped
+    val doubles = intercept[IllegalArgumentException] {
+      KnnJoinPlan.join(queries.select(col("query_id"),
+        col("embedding").cast("array<double>").as("embedding")), emb, k = 3)
+    }
+    assert(doubles.getMessage.contains("ARRAY<FLOAT>"), doubles.getMessage)
+    val strings = intercept[IllegalArgumentException] {
+      KnnJoinPlan.join(queries, emb.withColumn("vec_id", col("vec_id").cast("string")), k = 3)
+    }
+    assert(strings.getMessage.contains("integral vec_id"), strings.getMessage)
   }
 
   test("dimension-mismatched data raises instead of silently skipping") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.core.{Fixtures, Tables}
 import graft.functions.Distances
-import graft.operators.{AsOfJoin, Knn, KnnTopK}
+import graft.operators.{AsOfJoin, Knn}
 import graft.streaming.Sessionize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
@@ -115,11 +115,24 @@ class PlanShapeSpec extends SparkSpecBase {
   test("aggregator kNN join: partial+final object hash aggregate (map-side top-k)") {
     withoutAqe {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val p = planOf(KnnTopK.join(
+      val p = planOf(ExactKnn.crossTopK(
         emb.filter(col("vec_id") < 3).select(col("vec_id").as("query_id"), col("embedding")),
         emb, k = 3, dim = Fixtures.Dim))
       val aggs = p.collect { case a: ObjectHashAggregateExec => a }
       assert(aggs.size == 2, s"expected partial+final ObjectHashAggregate, got ${aggs.size}")
+    }
+  }
+
+  test("knn_join_l2, knn_join_l2_agg, knn_join_l2_plan: KnnJoinExec, no WindowExec") {
+    withoutAqe {
+      Seq("knn_join_l2", "knn_join_l2_agg", "knn_join_l2_plan").foreach { name =>
+        val p = planOf(SparkEntry.queries(name)(spark, sfDir))
+        assert(p.collect { case e: graft.plans.KnnJoinExec => e }.size == 1,
+          s"$name must plan through exactly one KnnJoinExec")
+        assert(p.collect {
+          case w: org.apache.spark.sql.execution.window.WindowExec => w
+        }.isEmpty, s"$name plans a WindowExec")
+      }
     }
   }
 
